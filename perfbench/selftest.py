@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Self-test for graft-bench at scale 0.001 (6,000 lineitem rows).
+"""Self-test for graft-bench at scale 0.01 (60,000 lineitem rows).
 
     python3 perfbench/selftest.py
 
@@ -23,7 +23,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 import run  # noqa: E402
 
-SCALE = "0.001"
+# at 0.001 the 20 clustered embeddings fill too few IVF cells for v6's
+# probe to return its 10 neighbours per query
+SCALE = "0.01"
 
 
 def bench(workload, trace, corrupt=None):
