@@ -79,6 +79,139 @@ class SqlDialectSpec extends AnyFunSuite {
     GraftSql.sql(spark, "drop table updeep_t")
   }
 
+  // ------------------------------------------------ keyed DML semantics
+  private def run(s: String) = GraftSql.sql(spark, s)
+  private def rowCount = GraftSql.currentRowCount(spark)
+  private def intPairs(q: String): Seq[(Int, Int)] =
+    run(q).collect().toSeq.map(r => (r.getInt(0), r.getInt(1)))
+  /** A fresh `(k int, v int)` table keyed on `k` (or pk-less). */
+  private def keyedTable(t: String, rows: String, pk: Option[String] = Some("k"),
+      cols: String = "k int, v int"): Unit = {
+    run(s"drop table if exists $t")
+    GraftSql.clearPrimaryKey(t)
+    GraftSql.clearUniqueKeys(t)
+    run(s"create table $t ($cols)")
+    pk.foreach(GraftSql.registerPrimaryKey(t, _))
+    if (rows.nonEmpty) run(s"insert into $t values $rows")
+  }
+  private def dropKeyed(t: String): Unit = {
+    run(s"drop table if exists $t")
+    GraftSql.clearPrimaryKey(t)
+    GraftSql.clearUniqueKeys(t)
+  }
+
+  test("ON DUPLICATE KEY row_count: 1 per insert, 2 per changed row, 0 per unchanged hit") {
+    keyedTable("uprc_t", "(1, 10), (2, 20)")
+    try {
+      run("insert into uprc_t values (3, 30) on duplicate key update v = v + 1")
+      assert(rowCount == 1)
+      run("insert into uprc_t values (1, 0) on duplicate key update v = v + 1")
+      assert(rowCount == 2)
+      run("insert into uprc_t values (2, 0) on duplicate key update v = v")
+      assert(rowCount == 0)
+      // one statement mixing all three: 2 + 0 + 1
+      run("insert into uprc_t values (1, 0), (2, 0), (4, 40) " +
+        "on duplicate key update v = if(k = 1, v + 100, v)")
+      assert(rowCount == 3)
+      assert(intPairs("select k, v from uprc_t order by k") ==
+        Seq((1, 111), (2, 20), (3, 30), (4, 40)))
+    } finally dropKeyed("uprc_t")
+  }
+
+  test("ON DUPLICATE KEY VALUES(c) reads the incoming row, bare c the old one") {
+    keyedTable("upval_t", "(1, 10), (2, 20)")
+    try {
+      run("insert into upval_t values (1, 7), (2, 5) " +
+        "on duplicate key update v = values(v) * 100 + v")
+      assert(rowCount == 4)
+      assert(intPairs("select k, v from upval_t order by k") ==
+        Seq((1, 710), (2, 520)))
+    } finally dropKeyed("upval_t")
+  }
+
+  test("ON DUPLICATE KEY: a later unique key that clashes raises Duplicate entry") {
+    keyedTable("upuk_t", "(1, 1, 10), (2, 2, 20)", pk = Some("a"),
+      cols = "a int, b int, c int")
+    GraftSql.registerUniqueKey("upuk_t", "c", Seq("c"))
+    try {
+      val e = intercept[IllegalStateException](run(
+        "insert into upuk_t values (4, null, 10) on duplicate key update b = 5"))
+      assert(e.getMessage.contains("Duplicate entry '10' for key 'c'"))
+      // a pk hit updates in place even though its c matches too
+      run("insert into upuk_t values (1, 9, 10) on duplicate key update b = 7")
+      assert(rowCount == 2)
+      // a NULL unique value never clashes
+      run("insert into upuk_t values (5, 5, null) on duplicate key update b = 0")
+      assert(rowCount == 1)
+      assert(run("select a, b, c from upuk_t order by a").collect().toSeq
+        .map(r => (r.getInt(0), r.getInt(1), Option(r.get(2)))) ==
+        Seq((1, 7, Some(10)), (2, 2, Some(20)), (5, 5, None)))
+    } finally dropKeyed("upuk_t")
+  }
+
+  test("ON DUPLICATE KEY rejects an update of a unique key column") {
+    keyedTable("upukc_t", "(1, 1, 10)", pk = Some("a"), cols = "a int, b int, c int")
+    GraftSql.registerUniqueKey("upukc_t", "c", Seq("c"))
+    try {
+      val e = intercept[UnsupportedOperationException](run(
+        "insert into upukc_t values (1, 1, 10) on duplicate key update c = 11"))
+      assert(e.getMessage == "unsupported DML: update unique key on duplicate")
+      assert(run("select c from upukc_t").head.getInt(0) == 10)
+    } finally dropKeyed("upukc_t")
+  }
+
+  test("INSERT ... SELECT ... ON DUPLICATE KEY UPDATE chains repeated source keys") {
+    keyedTable("upsel_t", "(1, 10), (2, 20)")
+    keyedTable("upsel_src", "(1, 1), (3, 3), (1, 2), (3, 4), (2, 0)", pk = None)
+    try {
+      run("insert into upsel_t select k, v from upsel_src " +
+        "on duplicate key update v = v + values(v)")
+      // 2 + 2 (k=1 twice) + 1 + 2 (k=3 insert, then update) + 0
+      assert(rowCount == 7)
+      // k=1: 10+1+2; k=3: inserted 3, then +4; k=2: 20+0 is unchanged
+      assert(intPairs("select k, v from upsel_t order by k") ==
+        Seq((1, 13), (2, 20), (3, 7)))
+    } finally { dropKeyed("upsel_t"); dropKeyed("upsel_src") }
+  }
+
+  test("UPDATE evaluates every SET right-hand side against the old row") {
+    keyedTable("updswap_t", "(1, 10), (2, 20)", pk = None, cols = "a int, b int")
+    try {
+      run("update updswap_t set a = b, b = a + 1 where a = 1")
+      assert(rowCount == 1)
+      assert(intPairs("select a, b from updswap_t order by a") ==
+        Seq((2, 20), (10, 2)))
+    } finally dropKeyed("updswap_t")
+  }
+
+  test("DELETE ... LIMIT n with and without a primary key, and its row_count") {
+    keyedTable("dlpk_t", "(4, 2), (3, 1), (1, 1), (2, 1)")
+    keyedTable("dlnopk_t", "(3, 2), (1, 1), (2, 1), (1, 1)", pk = None,
+      cols = "a int, b int")
+    try {
+      // the n earliest matching rows in all-columns order go
+      run("delete from dlpk_t where v = 1 limit 2")
+      assert(rowCount == 2)
+      assert(intPairs("select k, v from dlpk_t order by k") == Seq((3, 1), (4, 2)))
+      // pk-less: identical rows are interchangeable, exactly n go
+      run("delete from dlnopk_t where b = 1 limit 2")
+      assert(rowCount == 2)
+      assert(intPairs("select a, b from dlnopk_t order by a") == Seq((2, 1), (3, 2)))
+      run("delete from dlnopk_t limit 1")
+      assert(rowCount == 1)
+      assert(intPairs("select a, b from dlnopk_t") == Seq((3, 2)))
+      // a predicate that is UNKNOWN keeps the row
+      run("insert into dlpk_t values (5, null)")
+      run("delete from dlpk_t where v > 1")
+      assert(rowCount == 1)
+      assert(intPairs("select k, coalesce(v, -1) from dlpk_t order by k") ==
+        Seq((3, 1), (5, -1)))
+      run("delete from dlpk_t")
+      assert(rowCount == 2)
+      assert(run("select * from dlpk_t").count() == 0)
+    } finally { dropKeyed("dlpk_t"); dropKeyed("dlnopk_t") }
+  }
+
   // ---------------------------------------------------------- interval
   private def tsTable(): Unit =
     Seq(
