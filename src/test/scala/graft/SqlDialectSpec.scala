@@ -184,6 +184,57 @@ class SqlDialectSpec extends AnyFunSuite {
     } finally dropKeyed("updswap_t")
   }
 
+  test("DELETE fires FOREIGN KEY ON DELETE actions before it commits") {
+    keyedTable("fkp_t", "(1, 1), (2, 2), (3, 3)", pk = Some("id"), cols = "id int, x int")
+    keyedTable("fkc_t", "(10, 1), (11, 2), (12, 1)", pk = Some("cid"), cols = "cid int, pid int")
+    keyedTable("fkn_t", "(20, 1), (21, 3)", pk = Some("cid"), cols = "cid int, pid int")
+    keyedTable("fks_t", "(1, null), (2, 1), (3, 2)", pk = Some("id"), cols = "id int, up int")
+    GraftSql.registerForeignKey("fkc_t", Seq("pid"), "fkp_t", Seq("id"), "cascade")
+    GraftSql.registerForeignKey("fkn_t", Seq("pid"), "fkp_t", Seq("id"), "set null")
+    GraftSql.registerForeignKey("fks_t", Seq("up"), "fks_t", Seq("id"), "set null")
+    def opt(q: String) = run(q).collect().toSeq
+      .map(r => (r.getInt(0), Option(r.get(1)).map(_.toString.toInt)))
+    try {
+      run("delete from fkp_t where id = 1")
+      assert(rowCount == 1)
+      assert(intPairs("select id, x from fkp_t order by id") == Seq((2, 2), (3, 3)))
+      assert(intPairs("select cid, pid from fkc_t order by cid") == Seq((11, 2)))
+      assert(opt("select cid, pid from fkn_t order by cid") ==
+        Seq((20, None), (21, Some(3))))
+      // self-referencing: the survivor that pointed at the deleted row
+      // loses the reference
+      run("delete from fks_t where id = 2")
+      assert(rowCount == 1)
+      assert(opt("select id, up from fks_t order by id") == Seq((1, None), (3, None)))
+      // a restricting reference blocks the delete and nothing commits
+      keyedTable("fkr_t", "(30, 3)", pk = Some("cid"), cols = "cid int, pid int")
+      GraftSql.registerForeignKey("fkr_t", Seq("pid"), "fkp_t", Seq("id"), "restrict")
+      val e = intercept[IllegalStateException](run("delete from fkp_t where id >= 2"))
+      assert(e.getMessage.contains("a foreign key constraint fails"))
+      assert(intPairs("select id, x from fkp_t order by id") == Seq((2, 2), (3, 3)))
+    } finally {
+      Seq("fkc_t", "fkn_t", "fks_t", "fkr_t").foreach(GraftSql.clearForeignKeys)
+      Seq("fkp_t", "fkc_t", "fkn_t", "fks_t", "fkr_t").foreach(dropKeyed)
+    }
+  }
+
+  test("REPLACE INTO and INSERT IGNORE affected rows over pk and unique keys") {
+    keyedTable("rpl_t", "(1, 1, 10), (2, 2, 20)", pk = Some("a"), cols = "a int, b int, c int")
+    GraftSql.registerUniqueKey("rpl_t", "c", Seq("c"))
+    def rows = run("select a, b, c from rpl_t order by a").collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
+    try {
+      // (1, 5, 20) replaces row 1 by pk AND row 2 by c: 1 insert + 2 victims
+      run("replace into rpl_t values (1, 5, 20), (3, 3, 30)")
+      assert(rowCount == 4)
+      assert(rows == Seq((1, 5, 20), (3, 3, 30)))
+      // an existing key or an earlier batch row's key is skipped
+      run("insert ignore into rpl_t values (1, 9, 90), (4, 4, 40), (5, 5, 40)")
+      assert(rowCount == 1)
+      assert(rows == Seq((1, 5, 20), (3, 3, 30), (4, 4, 40)))
+    } finally dropKeyed("rpl_t")
+  }
+
   test("DELETE ... LIMIT n with and without a primary key, and its row_count") {
     keyedTable("dlpk_t", "(4, 2), (3, 1), (1, 1), (2, 1)")
     keyedTable("dlnopk_t", "(3, 2), (1, 1), (2, 1), (1, 1)", pk = None,
