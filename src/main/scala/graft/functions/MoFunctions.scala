@@ -286,11 +286,16 @@ object MoFunctions {
     */
   private val JavaSafeTokens = "YymcdeHkhIisSfpWaMbj%".toSet
 
-  /** MySQL DATE_FORMAT. */
+  /** MySQL DATE_FORMAT. The Java-pattern path builds Spark's
+    * `DateFormatClass` directly: the SQL name `date_format` resolves a
+    * %-format back here, so going by name would never self-resolve.
+    */
   def moDateFormat(ts: Column, mysqlFmt: String): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, eagerExpression}
+    import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal}
     val tokens = """%(.)""".r.findAllMatchIn(mysqlFmt).map(_.group(1).head)
     if (tokens.forall(JavaSafeTokens.contains))
-      date_format(ts, mysqlFormatToJava(mysqlFmt))
+      column(DateFormatClass(eagerExpression(ts), Literal(mysqlFormatToJava(mysqlFmt))))
     else dateFormatUdf(ts.cast("timestamp"), lit(mysqlFmt))
   }
 
@@ -1292,6 +1297,7 @@ object MoFunctions {
   def registerAll(spark: SparkSession): Unit = {
     import org.apache.spark.sql.GraftColumnBridge.{column => asCol, eagerExpression}
     import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
     import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
     import org.apache.spark.unsafe.types.UTF8String
 
@@ -1324,6 +1330,20 @@ object MoFunctions {
         case None => dynDateFormat(args(0), args(1))
       }
     }
+    // MySQL's own DATE_FORMAT spelling: a literal %-format resolves to
+    // the mo_date_format builder above; anything else (a Java pattern,
+    // a computed format) stays on Spark's built-in
+    val dateFormatId = FunctionIdentifier("date_format")
+    val mysqlDateFormat = spark.sessionState.functionRegistry
+      .lookupFunctionBuilder(FunctionIdentifier("mo_date_format")).get
+    val builtinDateFormat = FunctionRegistry.builtin.lookupFunctionBuilder(dateFormatId).get
+    spark.sessionState.functionRegistry.registerFunction(dateFormatId,
+      FunctionRegistry.builtin.lookupFunction(dateFormatId).get,
+      (args: Seq[Expression]) => args match {
+        case Seq(_, Literal(f: UTF8String, _)) if f.toString.contains("%") =>
+          mysqlDateFormat(args)
+        case _ => builtinDateFormat(args)
+      })
     nat("to_days", "to_days(date)")(args => toDays(args(0)))
     nat("period_add", "period_add(yyyymm, n)")(args => periodAdd(args(0), args(1)))
     nat("period_diff", "period_diff(p1, p2)")(args => periodDiff(args(0), args(1)))

@@ -2206,13 +2206,10 @@ object GraftSql {
     // affected-rows inputs must count the PRE-overwrite state
     val namedN = named.count()
     val targetN = if (keySets.nonEmpty) target.count() else 0L
-    // break lineage off the table being overwritten
-    val snap = result.localCheckpoint(true)
-    snap.write.mode("overwrite").insertInto(table)
-    spark.catalog.refreshTable(table)
+    val written = commitTable(spark, table, result).count()
     // MySQL affected-rows for REPLACE = inserted + deleted victims
     if (keySets.nonEmpty)
-      setRowCount(spark, namedN + (targetN - (snap.count() - namedN)))
+      setRowCount(spark, namedN + (targetN - (written - namedN)))
     else setRowCount(spark, namedN)
     Some(Seq((table, "replaced")).toDF("table_name", "status"))
   }
@@ -2220,10 +2217,13 @@ object GraftSql {
   // ------------------------------------------------------------------
   // INSERT ... ON DUPLICATE KEY UPDATE / INSERT IGNORE — MySQL upsert
   // semantics over the pk + every UNIQUE key (reference: dedup join,
-  // pkg/sql/colexec/dedupjoin + fuzzyfilter). Spark mapping: the MERGE
-  // shape — per key set, a broadcast left join marks collisions; new
-  // rows that hit update in place (all RHS against the OLD row,
-  // VALUES(c) reading the incoming row), the rest append.
+  // pkg/sql/colexec/dedupjoin + fuzzyfilter). Spark mapping for the
+  // upsert: the batch splits into rounds with no repeated key; each
+  // round is ONE lazy plan built from plain joins — a left join of the
+  // table against the round's rows flags hits and changed rows as
+  // columns (every RHS against the OLD row, VALUES(c) reading the
+  // incoming row), an anti join appends the rest — materialized once
+  // by commitTable, whose checkpoint one pass then counts.
   // ------------------------------------------------------------------
 
   private val InsertDupRe =
@@ -2237,6 +2237,61 @@ object GraftSql {
     primaryKeys.get(table.toLowerCase)
       .map(_.split(",").map(_.trim).toSeq).toSeq ++
       uniqueKeysOf(table).map(_._2)
+
+  private def keyCols(keys: Seq[String]): Seq[Column] = keys.map(k => col(s"`$k`"))
+  private def keyNotNull(keys: Seq[String]): Column =
+    keys.map(k => col(s"`$k`").isNotNull).reduce(_ && _)
+
+  /** MySQL applies an upsert batch row by row: a row can collide with
+    * one the SAME statement just inserted, and repeated keys chain
+    * their updates (b=b+10 twice → +20). The batch splits into
+    * sequential rounds: a row's round is the occurrence index of its
+    * key, maximized over the key sets (a NULL key never collides), so
+    * no key repeats within a round. Every round runs — truncating would
+    * silently drop rows whose key repeats more often than the cap.
+    */
+  private def upsertRounds(spark: SparkSession, named: DataFrame,
+      keySets: Seq[Seq[String]]): Seq[DataFrame] = {
+    val tcols = named.columns.toSeq
+    if (named.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
+      // a literal VALUES batch: collect() reads the local relation
+      // without a Spark job, and the split runs on the driver
+      val idx = tcols.map(_.toLowerCase).zipWithIndex.toMap
+      val seen = keySets.map(_ => scala.collection.mutable.Map.empty[Seq[Any], Int])
+      val rows = named.collect().toSeq
+      val roundOf = rows.map { r =>
+        keySets.zip(seen).map { case (keys, n) =>
+          val vs = keys.map(k => r.get(idx(k.toLowerCase)))
+          if (vs.contains(null)) 1
+          else { n(vs) = n.getOrElse(vs, 0) + 1; n(vs) }
+        }.max
+      }
+      rows.zip(roundOf).groupBy(_._2).toSeq.sortBy(_._1).map { case (_, rs) =>
+        spark.createDataFrame(java.util.Arrays.asList(rs.map(_._1): _*), named.schema)
+      }
+    } else {
+      // a SELECT source stays distributed: per-key-set occurrence index
+      // by a window over the source order
+      val ordered = named.withColumn("__ord", monotonically_increasing_id())
+      val rnCols = keySets.zipWithIndex.map { case (keys, i) =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(keyCols(keys): _*).orderBy(col("__ord").asc)
+        when(!keyNotNull(keys), lit(1))
+          .otherwise(row_number().over(w)).as(s"__rn_$i")
+      }
+      val withRn = ordered
+        .select((tcols.map(c => col(s"`$c`")) ++ rnCols): _*)
+        .withColumn("__round",
+          if (keySets.sizeIs == 1) col("__rn_0")
+          else greatest(keySets.indices.map(i => col(s"__rn_$i")): _*))
+        .localCheckpoint(true)
+      val maxRoundRow = withRn.agg(max(col("__round"))).head
+      val maxRound = if (maxRoundRow.isNullAt(0)) 0 else maxRoundRow.getInt(0)
+      (1 to maxRound).map(r => withRn.filter(col("__round") === r)
+        .select(tcols.map(c => col(s"`$c`")): _*))
+    }
+  }
 
   private def insertOnDupRewrite(spark: SparkSession, q: String): Option[DataFrame] =
     matchMasked(InsertDupRe, q) match {
@@ -2266,96 +2321,62 @@ object GraftSql {
         // VALUES(c) reads the INCOMING row — exposed as __new_c
         def valuesRefs(e: String): String =
           e.replaceAll("(?i)\\bvalues\\s*\\(\\s*`?(\\w+)`?\\s*\\)", "`__new_$1`")
-        // MySQL applies the batch row-by-row: a row can collide with one
-        // the SAME statement just inserted, and repeated keys chain their
-        // updates (b=b+10 twice → +20). Split the batch into sequential
-        // ROUNDS by per-key occurrence index and upsert round-by-round —
-        // one extra Spark job per extra round, rounds are almost always 1.
-        val ordered = named0.withColumn("__ord", monotonically_increasing_id())
-        val rnCols = keySets.zipWithIndex.map { case (keys, i) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(keys.map(k => col(s"`$k`")): _*)
-            .orderBy(col("__ord").asc)
-          when(keys.map(k => col(s"`$k`").isNull).reduce(_ || _), lit(1))
-            .otherwise(row_number().over(w)).as(s"__rn_$i")
-        }
-        val withRn = ordered
-          .select((tcols.map(c => col(s"`$c`")) ++ rnCols): _*)
-          .withColumn("__round",
-            if (keySets.sizeIs == 1) col("__rn_0")
-            else greatest(keySets.indices.map(i => col(s"__rn_$i")): _*))
-          .localCheckpoint(true)
-        val maxRoundRow = withRn.agg(max(col("__round"))).head
-        // every round must run — truncating would silently drop rows
-        // whose key repeats more often than the cap; each round is one
-        // Spark job, so a deep batch is slow but never lossy
-        val maxRound =
-          if (maxRoundRow.isNullAt(0)) 0 else maxRoundRow.getInt(0)
+        val keys = keySets.head
         var affected = 0L
-        (1 to maxRound).foreach { r =>
-          val batch = withRn.filter(col("__round") === r)
-            .select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
+        upsertRounds(spark, named0, keySets).foreach { batch =>
           val pre = spark.table(table)
-          var cur = pre
-          var remaining = batch
-          var changedN = 0L
-          keySets.zipWithIndex.foreach { case (keys, ki) =>
-            if (ki > 0) {
-              // the reference's dup-update path keys on the FIRST index
-              // only; a residual collision on a later unique key is a
-              // raw duplicate error (indup_04_multi_uk_null: (4,NULL,10)
-              // errors "Duplicate entry '10' for key 'c'")
-              val clash = remaining
-                .filter(keys.map(k => col(s"`$k`").isNotNull).reduce(_ && _))
-                .join(broadcast(pre.select(keys.map(c => col(s"`$c`")): _*).distinct),
-                  keys, "left_semi")
-                .select(keys.map(c => col(s"`$c`")): _*).limit(1).collect()
-              if (clash.nonEmpty)
-                throw new IllegalStateException(
-                  s"Duplicate entry '${clash.head.toSeq.mkString("-")}' " +
-                    s"for key '${keys.head}'")
+          // the reference's dup-update path keys on the FIRST index
+          // only; a residual collision on a later unique key is a raw
+          // duplicate error (indup_04_multi_uk_null: (4,NULL,10) errors
+          // "Duplicate entry '10' for key 'c'"). Later key sets are never
+          // assigned (rejected above), so this check is all they need.
+          keySets.zipWithIndex.drop(1).foreach { case (later, ki) =>
+            val unmatched = keySets.take(ki).foldLeft(batch) { (b, ks) =>
+              b.join(pre.select(keyCols(ks): _*), ks, "left_anti")
             }
-            val hits = remaining
-              .filter(keys.map(k => col(s"`$k`").isNotNull).reduce(_ && _))
-            val marked = hits
-              .select(tcols.map(c => col(s"`$c`").as(s"__new_$c")) :+
-                lit(true).as("__new__hit"): _*)
-            val joinCond = keys.map(k =>
-              col(s"`$k`") === col(s"`__new_$k`")).reduce(_ && _)
-            var df = cur.join(broadcast(marked), joinCond, "left_outer")
-              .withColumn("__hit", coalesce(col("__new__hit"), lit(false)))
-            // every RHS evaluates against the OLD row + the incoming row
-            assigns.zipWithIndex.foreach { case ((_, e), i) =>
-              df = df.withColumn(s"__set_$i", expr(valuesRefs(e)))
-            }
-            // MySQL counts an update ONLY when a value actually changes
-            // (on dup update v=v → affected 0, row_count.result)
-            val chgCond = assigns.zipWithIndex.map { case ((c, _), i) =>
-              !(col(s"__set_$i") <=> col(s"`${fields(c.toLowerCase).name}`"))
-            }.reduce(_ || _)
-            df = df.withColumn("__chg", col("__hit") && chgCond)
-              .localCheckpoint(true)
-            changedN += df.filter(col("__chg")).count()
-            assigns.zipWithIndex.foreach { case ((c, _), i) =>
-              val f = fields(c.toLowerCase)
-              val rhs = storeCast(spark, table, f,
-                col(s"__set_$i"), df.schema(s"__set_$i").dataType)
-              df = df.withColumn(f.name,
-                when(col("__hit"), rhs).otherwise(col(s"`${f.name}`")))
-            }
-            cur = df.select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
-            // incoming rows that matched the ROUND-state on these keys
-            // are consumed (they updated in place)
-            remaining = remaining.join(
-              broadcast(pre.select(keys.map(c => col(s"`$c`")): _*).distinct),
-              keys, "left_anti")
-              .select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
+            val clash = unmatched.filter(keyNotNull(later))
+              .join(pre.select(keyCols(later): _*), later, "left_semi")
+              .select(keyCols(later): _*).limit(1).collect()
+            if (clash.nonEmpty)
+              throw new IllegalStateException(
+                s"Duplicate entry '${clash.head.toSeq.mkString("-")}' " +
+                  s"for key '${later.head}'")
           }
+          val incoming = batch.filter(keyNotNull(keys))
+            .select(tcols.map(c => col(s"`$c`").as(s"__new_$c")) :+
+              lit(true).as("__new__hit"): _*)
+          val joinCond = keys.map(k =>
+            col(s"`$k`") === col(s"`__new_$k`")).reduce(_ && _)
+          var df = pre.join(incoming, joinCond, "left_outer")
+            .withColumn("__hit", coalesce(col("__new__hit"), lit(false)))
+          assigns.zipWithIndex.foreach { case ((_, e), i) =>
+            df = df.withColumn(s"__set_$i", expr(valuesRefs(e)))
+          }
+          // MySQL counts an update ONLY when a value actually changes
+          // (on dup update v=v → affected 0, row_count.result)
+          val chgCond = assigns.zipWithIndex.map { case ((c, _), i) =>
+            !(col(s"__set_$i") <=> col(s"`${fields(c.toLowerCase).name}`"))
+          }.reduce(_ || _)
+          df = df.withColumn("__chg", col("__hit") && chgCond)
+          assigns.zipWithIndex.foreach { case ((c, _), i) =>
+            val f = fields(c.toLowerCase)
+            val rhs = storeCast(spark, table, f,
+              col(s"__set_$i"), df.schema(s"__set_$i").dataType)
+            df = df.withColumn(f.name,
+              when(col("__hit"), rhs).otherwise(col(s"`${f.name}`")))
+          }
+          val updated = df.select(tcols.map(c => col(s"`$c`")) :+
+            col("__chg") :+ lit(false).as("__ins"): _*)
+          // incoming rows that matched nothing in the round's start state
+          // append (a NULL key never matches)
+          val inserted = batch.join(pre.select(keyCols(keys): _*), keys, "left_anti")
+            .select(tcols.map(c => col(s"`$c`")) :+
+              lit(false).as("__chg") :+ lit(true).as("__ins"): _*)
           // MySQL affected-rows: 1 per inserted row, 2 per row whose
           // values actually CHANGED (unchanged hits count 0)
-          val insertedN = remaining.count()
-          affected += insertedN + changedN * 2
-          commitTable(spark, table, cur.unionByName(remaining))
+          val Seq(insertedN, changedN) = countFlags(
+            commitTable(spark, table, updated.unionByName(inserted)), "__ins", "__chg")
+          affected += insertedN + 2 * changedN
         }
         setRowCount(spark, affected)
         Some(spark.emptyDataFrame)
@@ -2434,7 +2455,7 @@ object GraftSql {
           }
         val targetN2 = target.count()
         setRowCount(spark,
-          commitTable(spark, table, target.unionByName(kept)) - targetN2)
+          commitTable(spark, table, target.unionByName(kept)).count() - targetN2)
         Some(spark.emptyDataFrame)
       case _ => None
     }
@@ -2497,9 +2518,11 @@ object GraftSql {
   // UPDATE / DELETE — batch DML over managed tables (the reference's
   // OLTP write path, `pkg/sql/plan/build_dml.go` buildUpdate/buildDelete;
   // BVT fulltext/gojieba `delete from src`, dml/update, dml/delete).
-  // Spark mapping: a distributed projection/filter over the current
-  // snapshot, committed through a localCheckpoint + overwrite — the
-  // same copy-on-write shape Delta/Iceberg use for UPDATE at scale.
+  // Spark mapping: one distributed projection over the current snapshot
+  // evaluates every new value plus a per-row flag (`__upd` / `__del`);
+  // commitTable materializes it once and overwrites the table with it —
+  // the copy-on-write shape Delta/Iceberg use for UPDATE at scale — and
+  // the affected-row count is read off the same checkpoint.
   // ------------------------------------------------------------------
 
   private val DeleteRe =
@@ -2507,11 +2530,37 @@ object GraftSql {
   private val UpdateRe =
     """(?is)^update\s+(ignore\s+)?(?:`?\w+`?\.)?`?(\w+)`?\s+set\s+(.+?)\s*(?:where\s+(.+?))?\s*(?:order\s+by\s+(.+?))?\s*(?:limit\s+(\d+))?\s*$""".r
 
-  private def commitTable(spark: SparkSession, table: String, df: DataFrame): Long = {
+  /** The copy-on-write commit every DML rewrite shares. `df` — the
+    * table's columns plus any flag columns — materializes ONCE in a
+    * localCheckpoint, which also cuts its lineage off the files the
+    * overwrite replaces; the rows where `keep` holds then overwrite the
+    * table. Returns the checkpoint, so affected-row counts aggregate
+    * over materialized rows instead of re-running the statement's plan.
+    */
+  private def commitTable(spark: SparkSession, table: String, df: DataFrame,
+      keep: Column = lit(true)): DataFrame = {
     val snap = df.localCheckpoint(true)
-    snap.write.mode("overwrite").insertInto(table)
+    snap.filter(keep)
+      .select(spark.table(table).columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+      .write.mode("overwrite").insertInto(table)
     spark.catalog.refreshTable(table)
-    snap.count() // cheap: the checkpoint is already materialized
+    snap
+  }
+
+  /** How many rows of a checkpoint hold each boolean flag column: one
+    * pass, one Spark job (a global aggregate adds a shuffle stage, a
+    * second job, for a handful of counts).
+    */
+  private def countFlags(snap: DataFrame, flags: String*): Seq[Long] = {
+    val at = flags.map(snap.schema.fieldIndex)
+    snap.queryExecution.toRdd.mapPartitions { rows =>
+      val n = new Array[Long](at.length)
+      rows.foreach(r => at.indices.foreach { i =>
+        if (!r.isNullAt(at(i)) && r.getBoolean(at(i))) n(i) += 1
+      })
+      Iterator.single(n)
+    }.fold(new Array[Long](at.length))((a, b) => a.zip(b).map(p => p._1 + p._2))
+      .toSeq
   }
 
   /** `WITH cte AS (...) UPDATE/DELETE ...` (with_insert.result:70-93):
@@ -3101,75 +3150,71 @@ object GraftSql {
         // copy-on-write DML doesn't compose with that layout yet
         if (Partitions.get(spark, table).isDefined) return None
         val target = spark.table(table)
-        val targetN = target.count()
-        val remaining = (Option(condOrNull), Option(limitOrNull)) match {
-          case (None, None) => target.limit(0)
-          case (Some(c), None) =>
-            // via SQL text so the predicate may hold subqueries
-            // (`WHERE id IN (SELECT id FROM cte)`, with_insert.result);
-            // rows stay when the predicate is FALSE or UNKNOWN
-            spark.sql(s"SELECT * FROM `$table` WHERE NOT coalesce(($c), false)")
-          case (condOpt, Some(n)) =>
+        val tcols = target.columns.toSeq
+        // UPDATE's shape: one pass flags every row `__del`; the deleted
+        // count and the survivors both come from one checkpoint
+        val condSql = Option(condOrNull)
+          .map(c => s"coalesce(($c), false)").getOrElse("true")
+        // via SQL text so the predicate may hold subqueries
+        // (`WHERE id IN (SELECT id FROM cte)`, with_insert.result);
+        // rows stay when the predicate is FALSE or UNKNOWN
+        val matched = spark.sql(s"SELECT *, $condSql AS __del FROM `$table`")
+        val flagged = Option(limitOrNull).map(_.toInt) match {
+          case None => matched
+          case Some(n) =>
             primaryKeys.get(table) match {
               case Some(pkTxt) =>
                 // LIMIT picks n matching rows; identity via the primary key
                 val pk = pkTxt.split(",").map(_.trim).toSeq
-                val doomed = condOpt.map(c =>
-                  spark.sql(s"SELECT * FROM `$table` WHERE ($c)")).getOrElse(target)
+                val doomed = matched.filter(col("__del"))
                   // deterministic pick: the reference deletes the earliest
                   // row; without a physical order, all-columns order stands
                   // in for insertion order
-                  .orderBy(target.columns.map(c => col(s"`$c`").asc).toIndexedSeq: _*)
-                  .limit(n.toInt).select(pk.map(c => col(s"`$c`")): _*)
-                // a Seq-join reorders columns key-first — restore the table
-                // layout (insertInto is positional)
-                target.join(broadcast(doomed), pk, "left_anti")
-                  .select(target.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+                  .orderBy(tcols.map(c => col(s"`$c`").asc).toIndexedSeq: _*)
+                  .limit(n).select(keyCols(pk): _*).distinct
+                  .withColumn("__pick", lit(true))
+                target.join(broadcast(doomed), pk, "left_outer")
+                  .select(tcols.map(c => col(s"`$c`")) :+
+                    coalesce(col("__pick"), lit(false)).as("__del"): _*)
               case None =>
                 // pk-less: an anti-join on any single column over-deletes
                 // duplicates; flag the first n matching rows by a running
                 // count over the all-columns order instead (identical rows
                 // are interchangeable, so a row-based pick is exact)
-                val condSql = condOpt
-                  .map(c => s"coalesce(($c), false)").getOrElse("true")
-                val flagged = spark.sql(
-                  s"SELECT *, $condSql AS __del FROM `$table`")
                 val w = org.apache.spark.sql.expressions.Window
-                  .orderBy(target.columns.map(c => col(s"`$c`").asc).toIndexedSeq: _*)
+                  .orderBy(tcols.map(c => col(s"`$c`").asc).toIndexedSeq: _*)
                   .rowsBetween(Long.MinValue, 0)
-                flagged.withColumn("__del", col("__del") &&
-                    sum(when(col("__del"), 1).otherwise(0)).over(w) <= n.toInt)
-                  .filter(!col("__del"))
-                  .select(target.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+                matched.withColumn("__del", col("__del") &&
+                  sum(when(col("__del"), 1).otherwise(0)).over(w) <= n)
             }
         }
+        // FK actions read the doomed rows before anything commits
+        lazy val doomed = flagged.filter(col("__del"))
+          .select(tcols.map(c => col(s"`$c`")): _*).localCheckpoint(true)
         // SELF-referencing ON DELETE SET NULL: surviving rows that
         // referenced a deleted key lose the reference (fk_issue_22736:
         // deleting the middle of a chain nulls the tail's pointer)
         val selfSetNull = foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
           .filter(r => r.parent == table.toLowerCase && r.onDelete == "set null")
-        var remainingFinal = remaining
+        var flaggedFinal = flagged
         if (fkChecksOn(spark) && selfSetNull.nonEmpty) {
-          val doomed = target.exceptAll(remaining).localCheckpoint(true)
           selfSetNull.foreach { r =>
             val keys = broadcast(doomed
               .select(r.parentCols.zipWithIndex.map { case (p, i) =>
                 col(s"`$p`").as(s"__sn$i") }.toIndexedSeq: _*)
               .distinct.withColumn("__snhit", lit(true)))
             val cond = r.childCols.zipWithIndex.map { case (c, i) =>
-              remainingFinal(s"`$c`") === keys(s"__sn$i") }.reduce(_ && _)
-            val cols = target.columns.toSeq
-            remainingFinal = r.childCols.foldLeft(
-              remainingFinal.join(keys, cond, "left_outer")) { (d, c) =>
+              flaggedFinal(s"`$c`") === keys(s"__sn$i") }.reduce(_ && _)
+            flaggedFinal = r.childCols.foldLeft(
+              flaggedFinal.join(keys, cond, "left_outer")) { (d, c) =>
                 d.withColumn(c,
                   when(col("__snhit"), lit(null)).otherwise(col(s"`$c`")))
-              }.select(cols.map(c => col(s"`$c`")).toIndexedSeq: _*)
+              }.select(tcols.map(c => col(s"`$c`")) :+ col("__del"): _*)
           }
         }
-        if (childRefsOf(table).nonEmpty)
-          fkOnDelete(spark, table,
-            target.exceptAll(remaining).localCheckpoint(true))
-        setRowCount(spark, targetN - commitTable(spark, table, remainingFinal))
+        if (childRefsOf(table).nonEmpty) fkOnDelete(spark, table, doomed)
+        setRowCount(spark, countFlags(
+          commitTable(spark, table, flaggedFinal, keep = !col("__del")), "__del").head)
         Some(spark.emptyDataFrame)
       case _ => None
     }
@@ -3394,12 +3439,9 @@ object GraftSql {
         // every check passed: fire the deferred ON UPDATE actions
         fkDeferredActions.foreach(_.apply())
         // MySQL's affected-rows for UPDATE is the matched-row count
-        val snapAll = df.select((target.columns.map(c => col(s"`$c`")) :+
-          col("__upd")).toIndexedSeq: _*).localCheckpoint(true)
-        setRowCount(spark, snapAll.filter(col("__upd")).count())
-        snapAll.select(target.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-          .write.mode("overwrite").insertInto(table)
-        spark.catalog.refreshTable(table)
+        setRowCount(spark, countFlags(commitTable(spark, table, df.select(
+          (target.columns.map(c => col(s"`$c`")) :+ col("__upd")).toIndexedSeq: _*)),
+          "__upd").head)
         Some(spark.emptyDataFrame)
       case _ => None
     }

@@ -160,6 +160,46 @@ class SqlDialectSpec extends AnyFunSuite {
     } finally dropKeyed("upukc_t")
   }
 
+  test("a one-row ON DUPLICATE KEY UPDATE on a keyed table runs at most 6 Spark jobs") {
+    keyedTable("upjobs_t", (1 to 200).map(i => s"($i, $i)").mkString(", "))
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach { g =>
+            if (g == "upjobs-end") sentinel.countDown()
+            else jobs.merge(g, 1, (a: Integer, b: Integer) => a + b)
+          }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    def counted(group: String, q: String): Unit = {
+      sc.setJobGroup(group, q)
+      try run(q) finally sc.clearJobGroup()
+    }
+    try {
+      // warm-up statement: one-off session jobs stay out of the count
+      run("insert into upjobs_t values (7, 0) on duplicate key update v = v + 1")
+      counted("upjobs-hit", "insert into upjobs_t values (9, 0) on duplicate key update v = v + 1")
+      counted("upjobs-new", "insert into upjobs_t values (900, 0) on duplicate key update v = v + 1")
+      // listener events arrive in order: once the sentinel job's start is
+      // seen, every job of both upserts has been counted
+      sc.setJobGroup("upjobs-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      Seq("upjobs-hit", "upjobs-new").foreach { g =>
+        val n = Option(jobs.get(g)).map(_.intValue).getOrElse(0)
+        assert(n >= 1 && n <= 6, s"$g ran $n Spark jobs")
+      }
+      assert(intPairs("select k, v from upjobs_t where k in (7, 9, 900) order by k") ==
+        Seq((7, 8), (9, 10), (900, 0)))
+    } finally {
+      sc.removeSparkListener(listener)
+      dropKeyed("upjobs_t")
+    }
+  }
+
   test("INSERT ... SELECT ... ON DUPLICATE KEY UPDATE chains repeated source keys") {
     keyedTable("upsel_t", "(1, 10), (2, 20)")
     keyedTable("upsel_src", "(1, 1), (3, 3), (1, 2), (3, 4), (2, 0)", pk = None)

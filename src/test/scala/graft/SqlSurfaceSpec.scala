@@ -127,6 +127,22 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(a.map(_._1).distinct.size > 50) // actually random, not constant
   }
 
+  test("MySQL date_format with a %-format resolves to mo_date_format") {
+    val ts = "TIMESTAMP '2024-03-05 07:08:09'"
+    def one(q: String) = graft.sql.GraftSql.sql(spark, q).head.getString(0)
+    // through the dialect layer and straight through spark.sql alike
+    assert(one(s"SELECT date_format($ts, '%Y-%m')") == "2024-03")
+    assert(spark.sql(s"SELECT date_format($ts, '%d/%m/%Y %H:%i')").head.getString(0) ==
+      "05/03/2024 07:08")
+    // tokens a Java pattern cannot express take the renderer
+    assert(one(s"SELECT date_format($ts, '%D %M, %l%p')") == "5th March, 7AM")
+    // %% is a literal percent sign, never a re-resolved format
+    assert(one(s"SELECT date_format($ts, '%Y%%')") == "2024%")
+    // a Java pattern stays on Spark's built-in date_format
+    assert(one(s"SELECT date_format($ts, 'yyyy-MM-dd HH:mm')") == "2024-03-05 07:08")
+    assert(one(s"SELECT date_format(CAST(NULL AS TIMESTAMP), '%Y')") == null)
+  }
+
   test("csv and json sources round-trip a table") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ext").toString
     val src = Tables.nation(spark, "/root/testdata/sf0.001")
