@@ -31,6 +31,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPostHocResolutionRule(session => new graft.plans.IvfPqAnnRule(session))
     // partition pruning over Partitions-managed tables (no-op when none)
     e.injectOptimizerRule(session => new graft.plans.PartitionPruneRule(session))
+    // WITH RECURSIVE over a row-local step: one task and one broadcast of
+    // the joined relation instead of a planning pass and jobs per level
+    e.injectPlannerStrategy(_ => graft.plans.RecursiveExpandStrategy)
     // elementwise vector arithmetic: `vec + vec`, `vec * scalar` — the
     // reference's vecf32/vecf64 operator family; resolves what Spark's
     // numeric-only BinaryArithmetic would reject

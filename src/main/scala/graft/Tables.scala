@@ -51,6 +51,12 @@ object Tables {
   /** Entries currently held (test/monitoring hook). */
   private[graft] def planCacheSize: Int = planCache.size()
 
+  // per SparkContext, the planCache keys its one ApplicationEnd listener
+  // frees (both weak, like planCache: nothing here keeps a stopped
+  // context or a dropped session state alive)
+  private val endListeners =
+    new java.util.WeakHashMap[org.apache.spark.SparkContext, java.util.Set[AnyRef]]()
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val per = planCache.synchronized {
       var m = planCache.get(spark.sharedState)
@@ -58,16 +64,20 @@ object Tables {
         m = scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
         planCache.put(spark.sharedState, m)
         // the cached DataFrames strongly reference their session (and so
-        // the weak key): free the entry eagerly when the context stops,
-        // or a long-lived multi-session service leaks every dead
-        // session's plans until clearPlanCache
-        val key = spark.sharedState
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
+        // the weak key): free the context's entries eagerly when it stops,
+        // or a long-lived multi-session service leaks every dead session's
+        // plans until clearPlanCache. One listener per context: the map is
+        // re-created after every clearPlanCache, the listener is not.
+        endListeners.computeIfAbsent(spark.sparkContext, sc => {
+          val keys = java.util.Collections.newSetFromMap(
+            new java.util.WeakHashMap[AnyRef, java.lang.Boolean]())
+          sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
             override def onApplicationEnd(
                 e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              planCache.remove(key)
+              planCache.synchronized(keys.forEach(k => planCache.remove(k)))
           })
+          keys
+        }).add(spark.sharedState)
       }
       m
     }

@@ -13,10 +13,14 @@ import org.apache.spark.sql.DataFrame
   * reference/MySQL default).
   *
   * Spark 4.1's native WITH RECURSIVE (UnionLoop) covers the single
-  * anchor + single UNION ALL branch shape in one planned query — prefer
-  * it (the GraftSql shim does). This driver remains for the shapes the
-  * native engine rejects: multi-anchor, several recursive branches,
-  * UNION DISTINCT fixpoints.
+  * anchor + single UNION ALL branch shape — prefer it (the GraftSql shim
+  * does). `UnionLoopExec` still runs one analysis/planning pass and
+  * several jobs per level (rc1: 8 passes, 35 jobs); a row-local step
+  * (Project/Filter chains over the recursive reference, optionally over
+  * an inner equi-join with a broadcastable relation) instead runs as one
+  * `graft.plans.RecursiveExpandExec` task. This driver remains for the
+  * shapes the native engine rejects: multi-anchor, several recursive
+  * branches, UNION DISTINCT fixpoints.
   *
   * Scale notes: one persist+count job materializes each level and
   * answers the emptiness probe; the accumulator lineage compacts through

@@ -367,12 +367,15 @@ object Relational extends QueryModule {
   // --------------------------------------------------------- recursive CTE
   // Synthetic hierarchy: parent(c) = c DIV 4, rooted at custkey 1 —
   // union-until-fixpoint (UNION ALL semantics, like WITH RECURSIVE).
-  /** Spark 4.1's native WITH RECURSIVE plans the whole fixpoint as one
-    * query (UnionLoop) — no driver round-trips per level, which is what
-    * survives a 1000-executor recursion. Locally it measures within
-    * noise of the driver loop (1.3–1.5 s either way at sf0.1);
-    * `RecursiveCte.iterate` remains the driver for the shapes native
-    * recursion rejects (multi-anchor, >2 branches, UNION DISTINCT).
+  /** Spark 4.1's `UnionLoopExec` re-plans the step once per level: rc1
+    * ran 35 Spark jobs and 8 analysis/optimization/planning passes for
+    * its 8 levels (1.7 s at sf0.1 on 4 cores). Its step is a
+    * Project/Filter chain over an inner equi-join of the frontier with
+    * customer, so [[graft.plans.RecursiveExpandStrategy]] plans it as one
+    * `RecursiveExpandExec`: customer is broadcast once and one task
+    * expands the levels (3 jobs). `RecursiveCte.iterate` remains the
+    * driver for the shapes native recursion rejects (multi-anchor,
+    * >2 branches, UNION DISTINCT).
     */
   private def recursiveHierarchy(s: SparkSession, d: String): DataFrame = {
     Tables.registerAll(s, d)

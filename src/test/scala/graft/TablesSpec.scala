@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Guard against testdata regeneration silently breaking ingestion: every
   * table at every available SF must load, have rows, and events.ts must
   * resolve to a plain TIMESTAMP whatever the parquet writer encoded.
@@ -42,9 +44,28 @@ class TablesSpec extends AnyFunSuite {
     while (Tables.planCacheSize != 0 && System.nanoTime() < deadline)
       Thread.sleep(20)
     assert(Tables.planCacheSize == 0, "entry not freed on application end")
-    // re-load works and re-registers (idempotent lifecycle)
+    // re-load works; the context's one listener stays registered
     Tables.load(spark, sfDirs.head, "region")
     assert(Tables.planCacheSize == 1)
+  }
+
+  test("clearPlanCache and reload keep one ApplicationEnd listener per context") {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
+    // the bus's registered listeners (a bytecode-public method); load's
+    // listener is an anonymous class of the Tables object
+    def registered(): Int = bus.getClass.getMethods
+      .find(m => m.getName == "listeners" && m.getParameterCount == 0).get
+      .invoke(bus).asInstanceOf[java.util.List[AnyRef]].asScala
+      .count(_.getClass.getName.startsWith("graft.Tables$"))
+    Tables.load(spark, sfDirs.head, "region")
+    assert(registered() == 1)
+    for (_ <- 1 to 2) {
+      Tables.clearPlanCache()
+      Tables.load(spark, sfDirs.head, "region")
+    }
+    assert(Tables.planCacheSize == 1)
+    assert(registered() == 1, s"${registered()} ApplicationEnd listeners on one context")
   }
 
   test("events.ts is a usable session-zone timestamp") {
